@@ -18,8 +18,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from universql_spark.iceberg_format import IcebergTable
-from universql_spark.tableformat import CommitConflict
+from universql_spark.iceberg_format import CommitConflict, IcebergTable
 
 
 def _mk(spark, tmp_path):

@@ -32,8 +32,7 @@ import urllib.error
 import urllib.request
 from collections.abc import Callable
 
-from universql_spark.iceberg_format import IcebergTable
-from universql_spark.tableformat import CommitConflict
+from universql_spark.iceberg_format import CommitConflict, IcebergTable
 
 
 def metadata_updates(base: dict, new: dict) -> list[dict]:

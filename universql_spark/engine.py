@@ -517,8 +517,9 @@ class Engine:
         #: "not dynamic / manual refresh". In-memory cache so the read-path
         #: staleness check does not re-read metadata files per SELECT
         self._dynamic_meta: dict[str, tuple[int, int]] = {}
-        #: CREATE ICEBERG TABLE targets -> SnapshotTable (tableformat.py):
-        #: snapshot manifests + file-granular copy-on-write DML + time travel
+        #: snapshot-backed tables -> IcebergTable (iceberg_format.py): CREATE
+        #: ICEBERG TABLE targets and adopted plain tables; snapshot manifests
+        #: + file-granular copy-on-write DML + time travel
         self.snap_tables: dict[str, "object"] = {}
         #: catalog write-back (reference warehouse/snowflake.py:73-88):
         #: after CREATE ICEBERG TABLE, invoke (table_name,
@@ -1377,8 +1378,8 @@ class Engine:
                 tbl = bare_name(self._resolve_name(m.group(2)))
                 if tbl not in self.snap_tables:
                     # change tracking needs snapshots: ADOPT a plain managed
-                    # parquet table into the snapshot format (metadata-only
-                    # file moves — the same upgrade first DML performs)
+                    # parquet table into Iceberg (metadata-only file moves —
+                    # the same upgrade first DML performs)
                     self._adopt_for_dml(
                         re.compile(r"(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?STREAM\s+[\w.\"]+\s+ON\s+TABLE\s+([\w.\"]+)"),
                         stmt,
@@ -1737,15 +1738,8 @@ class Engine:
             if pm2 and bare_name(pm2.group(1)) in self.snap_tables:
                 # partition evolution (Iceberg spec): a new default spec,
                 # metadata-only — old files are never rewritten
-                from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
-
                 bn = bare_name(pm2.group(1))
                 snap = self.snap_tables[bn]
-                if not isinstance(snap, IcebergTable):
-                    raise QueryError(
-                        f"{bn} is not an Iceberg table (partition evolution "
-                        "needs the metadata chain)", "42000",
-                    )
                 try:
                     if pm2.group(2).upper() == "ADD":
                         if pm2.group(3):  # transform(col) form
@@ -3474,7 +3468,7 @@ class Engine:
 
     def _resolve_streams(self, stmt: str) -> str:
         """Substitute STREAM references with temp views over the table's
-        change feed since the stream's bookmark (SnapshotTable.
+        change feed since the stream's bookmark (IcebergTable.
         changes_between: file-granular diff, METADATA$ACTION/ISUPDATE
         columns). Referenced streams are recorded; a consuming DML advances
         their bookmarks (Snowflake's read-on-DML consumption contract)."""
@@ -3598,10 +3592,8 @@ class Engine:
     def _recorded_cluster_keys(self, bn: str) -> list[str] | None:
         """The table's stored CLUSTER BY columns (Iceberg default sort
         order), or None when no clustering key is recorded."""
-        from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
-
         snap = self.snap_tables.get(bn)
-        if not isinstance(snap, IcebergTable):
+        if snap is None:
             return None
         _v, meta = snap._read_metadata()
         order = next(
@@ -3624,11 +3616,9 @@ class Engine:
         table's recorded sort order (CLUSTER BY keys) is used."""
         import json  # noqa: PLC0415
 
-        from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
-
         bn = bare_name(table)
         snap = self.snap_tables.get(bn)
-        if not isinstance(snap, IcebergTable):
+        if snap is None:
             raise QueryError(
                 f"SYSTEM$CLUSTERING_INFORMATION: {bn} is not an Iceberg table", "42000"
             )
@@ -3899,7 +3889,7 @@ class Engine:
                 continue  # session-state only when the db isn't a Spark database
         return _status(f"use {kind.lower()} {name}")
 
-    # -- snapshot tables (tableformat.py) ----------------------------------
+    # -- snapshot-backed tables (iceberg_format.py) ------------------------
 
     def _reclaim_dropped(self, name: str) -> None:
         """Creating a new table under a dropped name forfeits its UNDROP
@@ -4008,7 +3998,7 @@ class Engine:
         return os.path.join(base.replace("file:", ""), "_snap", bare_name(name))
 
     def _snap_target(self, pattern: re.Pattern, sql: str):
-        """(name, SnapshotTable) when the statement's target is one."""
+        """(name, IcebergTable) when the statement's target is one."""
         m = pattern.match(sql)
         if not m:
             return None
@@ -4017,13 +4007,13 @@ class Engine:
         return (name, snap) if snap else None
 
     def _adopt_for_dml(self, pattern: re.Pattern, sql: str):
-        """Upgrade an UNPARTITIONED plain managed parquet table to the
-        snapshot format on first DML, so DELETE/UPDATE/MERGE run
-        file-granular copy-on-write instead of a whole-table shadow swap
-        (VERDICT r2 'What's wrong' #3 — the one remaining full-rewrite DML
-        path). The adoption itself is metadata-scale: the table's existing
-        parquet files are MOVED (same-filesystem rename) under the snapshot
-        root and referenced as snapshot 1 — zero bytes of data rewritten.
+        """Upgrade an UNPARTITIONED plain managed parquet table to Iceberg
+        on first DML, so DELETE/UPDATE/MERGE run file-granular copy-on-write
+        instead of a whole-table shadow swap (VERDICT r2 'What's wrong' #3 —
+        the one remaining full-rewrite DML path). The adoption itself is
+        metadata-scale: the table's existing parquet files are MOVED
+        (same-filesystem rename) under the table root and committed as
+        snapshot 1 — zero bytes of data rewritten (IcebergTable.adopt).
         Partitioned tables keep the partition-granular dynamic-overwrite
         path; qualified (non-default-namespace) tables keep the shadow swap
         (snap_tables is keyed by bare name)."""
@@ -4041,14 +4031,13 @@ class Engine:
                 return None
             if any(c.isPartition for c in self.spark.catalog.listColumns(resolved)):
                 return None
-            files = [
-                f.removeprefix("file:") for f in self.spark.table(resolved).inputFiles()
-            ]
+            plain = self.spark.table(resolved)
+            files = [f.removeprefix("file:") for f in plain.inputFiles()]
             if not files or not all(f.endswith(".parquet") for f in files):
                 return None
         except Exception:
             return None
-        from universql_spark.tableformat import SnapshotTable  # noqa: PLC0415
+        from universql_spark.iceberg_format import IcebergTable  # noqa: PLC0415
 
         root = self._snap_root(name)
         self._reclaim_dropped(bn)
@@ -4061,16 +4050,9 @@ class Engine:
 
             if not warehouse_guard.reclaim_orphan(self.spark, root):
                 return None  # leave DML on the safe shadow-swap path
-        dest_dir = os.path.join(root, "data", "adopted-v1")
-        os.makedirs(dest_dir, exist_ok=True)
-        moved = []
-        for f in files:
-            dest = os.path.join(dest_dir, os.path.basename(f))
-            os.rename(f, dest)
-            moved.append(dest)
+        snap = IcebergTable.adopt(root, files, plain.schema)
         # the managed dir is now fileless; DROP purges only the husk
         self.spark.sql(f"DROP TABLE {resolved}")
-        snap = SnapshotTable.adopt(root, moved)
         self.snap_tables[bn] = snap
         self._refresh_snap_view(bn)
         return (bn, snap)
@@ -4213,7 +4195,7 @@ class Engine:
     def _resolve_changes_clause(self, stmt: str) -> str:
         """`t CHANGES(INFORMATION => DEFAULT|APPEND_ONLY) AT|BEFORE(...)
         [END(...)]` -> temp view over the table's row-level change feed
-        between the two points (SnapshotTable.changes_between — the same
+        between the two points (IcebergTable.changes_between — the same
         file-granular diff under STREAM objects). APPEND_ONLY keeps only
         INSERT actions, Snowflake's contract for append-only change
         queries. Runs before _resolve_time_travel so the AT inside the

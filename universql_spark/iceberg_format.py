@@ -20,13 +20,31 @@ the public spec (https://iceberg.apache.org/spec/, format-version 2):
   Iceberg's own manifest-compaction produces;
 - immutable parquet data files under `data/`.
 
-The copy-on-write DML mechanics (file-granular DELETE/UPDATE/MERGE via
-input_file_name targeting, snapshot time travel) are inherited unchanged
-from SnapshotTable — this class swaps only the metadata persistence, so
-the SAME engine statements (CREATE ICEBERG TABLE / MERGE / AT(SNAPSHOT =>
-n)) now produce and consume spec-conformant Iceberg metadata. Readers plan
-a scan as: version-hint -> metadata.json -> snapshot -> manifest list ->
-manifests -> live data files -> spark.read.parquet(*files).
+Every snapshot-backed table in the engine uses this one format: CREATE
+ICEBERG TABLE writes it, and a plain unpartitioned managed table is ADOPTED
+into it on its first DML or STREAM (metadata-only: its parquet files are
+moved under the table root and committed as snapshot 1). Readers plan a
+scan as: version-hint -> metadata.json -> snapshot -> manifest list ->
+manifests -> live data files -> spark.read.parquet(*files), so every read
+is a consistent point-in-time view and TIME TRAVEL is reading an older
+snapshot.
+
+Writes never mutate files. Appends add files plus a new snapshot;
+DELETE/UPDATE/MERGE are FILE-GRANULAR copy-on-write by default: the files
+holding affected rows are found from the scan's file path (a
+manifest-sized distinct over matched rows only, after manifest-bound
+pruning), ONLY those files are rewritten, and the new snapshot lists
+(live - affected) + rewritten + appended. This bounds rewrite cost on
+unpartitioned tables too, and is exactly Iceberg's copy-on-write write
+mode; `write.delete.mode=merge-on-read` commits positional deletes
+instead.
+
+Concurrency: commits are DELTA-based (added/removed files) and go through
+an optimistic retry loop on the HadoopCatalog compare-and-swap (exclusive
+creation of the next vN.metadata.json). The loser REBASES: appends
+re-apply on the winner's snapshot, rewrites re-validate that every file
+they rewrote is still live and raise CommitConflict if not (Iceberg's
+snapshot-isolation validation).
 
 Scale note: metadata I/O is driver-side and manifest-sized (KBs per
 commit), never data-sized; scan planning reads only the current snapshot's
@@ -43,11 +61,20 @@ import time
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from universql_spark import avro_io
-from universql_spark.tableformat import MAX_COMMIT_RETRIES, CommitConflict, SnapshotTable
+
+
+class CommitConflict(RuntimeError):
+    """Optimistic-concurrency failure: a concurrent commit invalidated this
+    operation (a file it rewrote is no longer live) or the commit lost the
+    version race more times than MAX_COMMIT_RETRIES."""
+
+
+MAX_COMMIT_RETRIES = 10
 
 # manifest-list entry (spec: "Manifest Lists", field-ids 500-517)
 _MANIFEST_FILE_SCHEMA = {
@@ -408,17 +435,25 @@ def _deser_bound(b: bytes, itype: str):
 def _file_bounds(path: str, fields: list[dict]) -> tuple[list[dict], list[dict]]:
     """Per-column [min,max] from the parquet FOOTER (row-group stats —
     metadata-only, no data read) -> (lower_bounds, upper_bounds) entries
-    keyed by Iceberg field id."""
+    keyed by Iceberg field id. Row-group statistics are indexed by parquet
+    LEAF column, so each top-level field resolves through its leaf path: a
+    struct/map/array column ahead of it has several leaves. A dotted path
+    two leaves share (a top-level `a.b` beside struct `a` with child `b`)
+    gets no bounds."""
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(path)
-    arrow_schema = pf.schema_arrow
+    pschema = pf.metadata.schema
+    leaf: dict[str, int | None] = {}
+    for i in range(len(pschema)):
+        p = pschema.column(i).path
+        leaf[p] = None if p in leaf else i
     lower, upper = [], []
     for f in fields:
         if not isinstance(f["type"], str) or f["type"] not in _BOUNDABLE:
             continue
-        idx = arrow_schema.get_field_index(f["name"])
-        if idx < 0:
+        idx = leaf.get(f["name"])
+        if idx is None:
             continue
         mins, maxs = [], []
         for rg in range(pf.metadata.num_row_groups):
@@ -481,11 +516,11 @@ def _range_overlaps(op: str, v: Any, lo: Any, hi: Any) -> bool:
     return True
 
 
-class IcebergTable(SnapshotTable):
-    """SnapshotTable whose persistence layer is the Iceberg v2 format."""
+class IcebergTable:
+    """A snapshot-backed table persisted in the Iceberg v2 format."""
 
     def __init__(self, root: str):
-        super().__init__(root)
+        self.root = root
         self._version_cache: dict[int, dict] = {}
 
     # -- layout ------------------------------------------------------------
@@ -635,6 +670,73 @@ class IcebergTable(SnapshotTable):
             "retired_names": list(cached["retired_names"]),
         }
 
+    # -- snapshot and file lookups -----------------------------------------
+
+    def snapshots(self) -> list[dict]:
+        return self._load()["snapshots"]
+
+    def current_files(self) -> list[str]:
+        return self.snapshots()[-1]["files"]
+
+    def current_delete_files(self) -> list[str]:
+        """Positional-delete files of the current snapshot (merge-on-read)."""
+        return self.deletes_at()
+
+    @staticmethod
+    def _snapshot_at(
+        snaps: list[dict], snapshot_id: int | None, timestamp_ms: int | None
+    ) -> dict | None:
+        """The snapshot with `snapshot_id`, else the last one committed at
+        or before `timestamp_ms`, else the current one; None when no
+        snapshot qualifies. An unknown id raises."""
+        if snapshot_id is not None:
+            for s in snaps:
+                if s["id"] == snapshot_id:
+                    return s
+            raise ValueError(f"unknown snapshot {snapshot_id}")
+        if timestamp_ms is not None:
+            return next((s for s in reversed(snaps) if s["timestamp_ms"] <= timestamp_ms), None)
+        return snaps[-1] if snaps else None
+
+    def files_at(self, snapshot_id: int | None = None, timestamp_ms: int | None = None) -> list[str]:
+        s = self._snapshot_at(self.snapshots(), snapshot_id, timestamp_ms)
+        if s is None:
+            raise ValueError(f"no snapshot at or before {timestamp_ms}")
+        return s["files"]
+
+    def deletes_at(self, snapshot_id: int | None = None, timestamp_ms: int | None = None) -> list[str]:
+        s = self._snapshot_at(self.snapshots(), snapshot_id, timestamp_ms)
+        return s.get("delete_files", []) if s else []
+
+    def eq_entries_at(
+        self, snapshot_id: int | None = None, timestamp_ms: int | None = None
+    ) -> list[dict]:
+        """Equality-delete entries [{"path", "cols", "seq"}] live at a
+        snapshot. `seq` is the SEQUENCE NUMBER of the committing snapshot
+        (its 1-based position), the spec's applicability key: an equality
+        delete removes matching rows only from data files with a strictly
+        SMALLER sequence number — which is what lets a later re-insert of
+        the same key survive (CDC ordering)."""
+        snaps = self.snapshots()
+        target = self._snapshot_at(snaps, snapshot_id, timestamp_ms)
+        if target is None:
+            return []
+        first_eq: dict[str, int] = {}
+        for i, s in enumerate(snaps):
+            for e in s.get("eq_delete_files", []):
+                first_eq.setdefault(e["path"], i + 1)
+        return [
+            {**e, "seq": first_eq[e["path"]]} for e in target.get("eq_delete_files", [])
+        ]
+
+    def _file_seq_map(self) -> dict[str, int]:
+        """data file -> sequence number of the snapshot that added it."""
+        out: dict[str, int] = {}
+        for i, s in enumerate(self.snapshots()):
+            for f in s["files"]:
+                out.setdefault(f, i + 1)
+        return out
+
     # -- table properties --------------------------------------------------
 
     def get_property(self, key: str, default: str | None = None) -> str | None:
@@ -743,6 +845,59 @@ class IcebergTable(SnapshotTable):
                 return
         raise CommitConflict("drop_partition_field lost the commit race")
 
+    # -- schema evolution (metadata-only; _commit turns each op into a new
+    # schema entry) ---------------------------------------------------------
+
+    def add_column(self, col: str, sql_type: str) -> None:
+        """Schema evolution as a METADATA operation: no file is rewritten;
+        readers surface the column as NULL for pre-evolution files."""
+        for _ in range(MAX_COMMIT_RETRIES):
+            meta = self._load()
+            self._check_name_fresh(meta, col)
+            meta.setdefault("added_columns", []).append([col, sql_type])
+            if self._commit(meta):
+                return
+        raise CommitConflict(f"add_column({col}) lost the commit race {MAX_COMMIT_RETRIES} times")
+
+    def drop_column(self, col: str) -> None:
+        """DROP COLUMN without rewriting a byte: the column stays in the
+        files and is projected away at read (Iceberg drops the field from
+        the current schema the same way; column pruning means the dead
+        bytes are never even decoded)."""
+        for _ in range(MAX_COMMIT_RETRIES):
+            meta = self._load()
+            meta.setdefault("schema_ops", []).append(["drop", col])
+            meta.setdefault("retired_names", []).append(col)
+            if self._commit(meta):
+                return
+        raise CommitConflict(f"drop_column({col}) lost the commit race {MAX_COMMIT_RETRIES} times")
+
+    def rename_column(self, old: str, new: str) -> None:
+        """RENAME COLUMN as metadata: existing files keep the old physical
+        name; the read path coalesces old- and new-era files into the new
+        logical name (see _read_evolved)."""
+        for _ in range(MAX_COMMIT_RETRIES):
+            meta = self._load()
+            self._check_name_fresh(meta, new)
+            meta.setdefault("schema_ops", []).append(["rename", old, new])
+            meta.setdefault("retired_names", []).append(old)
+            if self._commit(meta):
+                return
+        raise CommitConflict(f"rename_column({old}) lost the commit race {MAX_COMMIT_RETRIES} times")
+
+    @staticmethod
+    def _check_name_fresh(meta: dict, name: str) -> None:
+        """Refuse to reuse a name that was ever dropped or renamed away.
+        The data files carry no parquet field-ids, so the name is the
+        file<->schema join key, and reviving it would silently resurrect old
+        files' values (Iceberg allows reuse because its parquet columns
+        carry field-ids)."""
+        if name in meta.get("retired_names", []):
+            raise ValueError(
+                f"column name {name!r} was previously dropped/renamed; "
+                "name reuse requires field-id tracking and is not supported"
+            )
+
     # -- commit (one new metadata version per operation) -------------------
 
     def _part_spec_fields(self, meta: dict | None = None) -> list[tuple[str, str, int]]:
@@ -776,17 +931,21 @@ class IcebergTable(SnapshotTable):
         return out
 
     def _write_files(self, df: DataFrame) -> list[str]:
-        """Partition-aware write: each data file belongs to exactly one
-        partition tuple. The partition columns are DUPLICATED as hive
+        """Write df as new immutable parquet files; return their paths.
+        Under a partition spec each data file belongs to exactly one
+        partition tuple: the partition columns are DUPLICATED as hive
         layout keys (__p_<col>=<value>/ dirs) so the originals stay inside
         the files — Iceberg data files are self-contained."""
         try:
             pf = self._part_spec_full()
         except Exception:
             pf = []
+        out = os.path.join(self.root, "data", uuid.uuid4().hex[:12])
         if not pf:
-            return super()._write_files(df)
-        from pyspark.sql import functions as F  # noqa: PLC0415
+            df.write.parquet(out)
+            return sorted(
+                os.path.join(out, f) for f in os.listdir(out) if f.endswith(".parquet")
+            )
 
         def texpr(transform: str, src: str):
             c = F.col(src)
@@ -807,7 +966,6 @@ class IcebergTable(SnapshotTable):
                 return c - (((c % w) + w) % w)
             raise ValueError(f"unsupported partition transform {transform}")
 
-        out = os.path.join(self.root, "data", uuid.uuid4().hex[:12])
         dup = {f"__p_{n}": texpr(tr, src) for n, _t, _f, tr, src in pf}
         staged = df.withColumns(dup)
         # shuffle on the partition keys first: without it every input task
@@ -1098,6 +1256,121 @@ class IcebergTable(SnapshotTable):
         )
         return self._cas_write_version(v, meta)
 
+    def _append_snapshot(
+        self, files: list[str], operation: str, delete_files: list[str] | None = None
+    ) -> int:
+        """Commit an ABSOLUTE file list (create/truncate semantics: the new
+        snapshot is exactly `files`, regardless of concurrent commits).
+        `delete_files=None` inherits the previous snapshot's positional
+        deletes (appends and copy-on-write rewrites leave them applicable:
+        they target exact file paths, and a rewritten file gets a NEW path,
+        so stale entries can never match resurrected rows)."""
+        for _ in range(MAX_COMMIT_RETRIES):
+            meta = self._load()
+            snaps = meta["snapshots"]
+            sid = snaps[-1]["id"] + 1 if snaps else 1
+            dfiles = delete_files
+            if dfiles is None:
+                dfiles = snaps[-1].get("delete_files", []) if snaps else []
+            efiles = snaps[-1].get("eq_delete_files", []) if snaps else []
+            snap = {
+                "id": sid,
+                "timestamp_ms": int(time.time() * 1000),
+                "operation": operation,
+                "files": files,
+            }
+            if dfiles:
+                snap["delete_files"] = dfiles
+            if efiles:
+                snap["eq_delete_files"] = efiles
+            snaps.append(snap)
+            if self._commit(meta):
+                return sid
+        raise CommitConflict(f"{operation} lost the commit race {MAX_COMMIT_RETRIES} times")
+
+    def _commit_delta(
+        self,
+        operation: str,
+        added: list[str],
+        removed: list[str],
+        delete_files: list[str] | None = None,
+        base_delete_files: list[str] | None = None,
+        required_live: list[str] | None = None,
+        eq_delete_files: list[dict] | None = None,
+        add_eq_delete_files: list[dict] | None = None,
+    ) -> int:
+        """Optimistic DELTA commit: the new snapshot is
+        (current live files - removed) + added, recomputed against the
+        LATEST committed snapshot on every attempt.
+
+        - Pure appends (removed == []) rebase automatically onto whatever a
+          concurrent writer committed — no lost updates, like Iceberg's
+          fast-append.
+        - Rewrites validate that every file they replace is STILL live; a
+          file concurrently rewritten or deleted raises CommitConflict
+          (Iceberg's copy-on-write validation under snapshot isolation).
+        - Overriding `delete_files` (e.g. compaction clearing positional
+          deletes) additionally requires the delete-file set to be unchanged
+          since the operation read it (`base_delete_files`); a concurrent
+          merge-on-read DELETE otherwise silently loses its tombstones.
+        - `required_live` names data files the operation depends on staying
+          in the snapshot WITHOUT rewriting them — the files a merge-on-read
+          commit's new positional deletes point at (Iceberg's
+          validateDataFilesExist). If a concurrent compaction/COW rewrite
+          replaced one, the new tombstones would dangle and the "deleted"
+          rows silently resurrect; conflict instead.
+        """
+        removed_set = set(removed)
+        for _ in range(MAX_COMMIT_RETRIES):
+            meta = self._load()
+            snaps = meta["snapshots"]
+            current = snaps[-1]["files"] if snaps else []
+            missing = removed_set - set(current)
+            if missing:
+                raise CommitConflict(
+                    f"{operation}: {len(missing)} file(s) this operation rewrote were "
+                    f"removed by a concurrent commit (e.g. {sorted(missing)[0]})"
+                )
+            if required_live:
+                dangling = set(required_live) - set(current)
+                if dangling:
+                    raise CommitConflict(
+                        f"{operation}: {len(dangling)} data file(s) targeted by this "
+                        f"operation's positional deletes were rewritten or removed by a "
+                        f"concurrent commit (e.g. {sorted(dangling)[0]})"
+                    )
+            cur_deletes = snaps[-1].get("delete_files", []) if snaps else []
+            if delete_files is not None and base_delete_files is not None and sorted(
+                cur_deletes
+            ) != sorted(base_delete_files):
+                raise CommitConflict(
+                    f"{operation}: positional-delete files changed under the operation"
+                )
+            sid = snaps[-1]["id"] + 1 if snaps else 1
+            snap = {
+                "id": sid,
+                "timestamp_ms": int(time.time() * 1000),
+                "operation": operation,
+                "files": [f for f in current if f not in removed_set] + added,
+            }
+            dfiles = cur_deletes if delete_files is None else delete_files
+            if dfiles:
+                snap["delete_files"] = dfiles
+            # equality-delete entries [{"path", "cols"}] inherit like
+            # positional tombstones; None inherits, a list replaces, and
+            # `add_eq_delete_files` appends INSIDE the retry loop so a
+            # concurrent writer's entries rebase instead of being dropped
+            cur_eq = snaps[-1].get("eq_delete_files", []) if snaps else []
+            efiles = cur_eq if eq_delete_files is None else eq_delete_files
+            if add_eq_delete_files:
+                efiles = efiles + add_eq_delete_files
+            if efiles:
+                snap["eq_delete_files"] = efiles
+            snaps.append(snap)
+            if self._commit(meta):
+                return sid
+        raise CommitConflict(f"{operation} lost the commit race {MAX_COMMIT_RETRIES} times")
+
     def plan_files(self, conds: list[tuple[str, str, Any]]) -> list[str]:
         """Manifest-level file skipping: keep only live files whose
         [lower,upper] column bounds can satisfy EVERY `col <op> literal`
@@ -1297,9 +1570,7 @@ class IcebergTable(SnapshotTable):
         broadcast of that would OOM executors at scale — above the gate the
         join runs un-hinted (AQE shuffles it, splitting skew as needed). The
         per-file sequence map is metadata-sized (always broadcast)."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        df = super()._read_files(spark, files)
+        df = self._read_evolved(spark, files)
         df = df.withColumn(
             "__path", F.regexp_replace(F.col("_metadata.file_path"), self._PATH_NORM, "")
         ).withColumn("__pos", F.col("_metadata.row_index"))
@@ -1334,9 +1605,39 @@ class IcebergTable(SnapshotTable):
             df = df.drop("__fseq")
         return df
 
+    def _read_evolved(self, spark: SparkSession, files: list[str]) -> DataFrame:
+        """Schema-normalized read of a file subset: mergeSchema unions the
+        per-file schemas (files written before an ADD COLUMN lack it —
+        Iceberg-style evolution, old files untouched) and columns added
+        after every one of these files were written surface as NULL."""
+        df = spark.read.option("mergeSchema", "true").parquet(*files)
+        meta = self._load()
+        for col, sql_type in meta.get("added_columns", []):
+            if col not in df.columns:
+                df = df.withColumn(col, F.lit(None).cast(sql_type))
+        # drop/rename are metadata ops applied at read time.  After
+        # `RENAME COLUMN a TO b`, pre-rename files physically hold `a` and
+        # post-rename files hold `b`; the merged schema then has both, each
+        # NULL outside its era, so coalesce stitches them into one logical
+        # column — the per-file identity Iceberg gets from field-ids (name
+        # reuse after drop/rename is refused at ALTER time, which is what
+        # keeps the name->field mapping unambiguous without ids in the files).
+        for op in meta.get("schema_ops", []):
+            if op[0] == "drop":
+                if op[1] in df.columns:
+                    df = df.drop(op[1])
+            elif op[0] == "rename":
+                old, new = op[1], op[2]
+                if old in df.columns and new in df.columns:
+                    df = df.withColumn(new, F.coalesce(F.col(new), F.col(old))).drop(old)
+                elif old in df.columns:
+                    df = df.withColumnRenamed(old, new)
+        return df
+
     def _read_files(self, spark, files: list[str], deletes: list[str] | None = None,
                     eq_entries: list[dict] | None = None):
-        """`deletes`/`eq_entries`=None applies the CURRENT snapshot's
+        """Read a file subset under positional/equality deletes.
+        `deletes`/`eq_entries`=None applies the CURRENT snapshot's
         positional/equality deletes — the right default for every
         DML/compaction path, which all operate on current files (a rewrite
         must not resurrect MoR-deleted rows). Pass explicit lists ([] or a
@@ -1346,7 +1647,7 @@ class IcebergTable(SnapshotTable):
         if eq_entries is None:
             eq_entries = self.eq_entries_at()
         if not deletes and not eq_entries:
-            return super()._read_files(spark, files)
+            return self._read_evolved(spark, files)
         return self._scan_with_pos(spark, files, deletes, eq_entries).drop(
             "__path", "__pos"
         )
@@ -1354,7 +1655,11 @@ class IcebergTable(SnapshotTable):
     def read(self, spark, snapshot_id=None, timestamp_ms=None):
         files = self.files_at(snapshot_id, timestamp_ms)
         if not files:
-            return super().read(spark, snapshot_id, timestamp_ms)
+            # empty table: preserve schema from any historical snapshot
+            for s in reversed(self.snapshots()):
+                if s["files"]:
+                    return self._read_files(spark, s["files"]).limit(0)
+            raise ValueError("table has no data files in any snapshot")
         # time travel applies THAT snapshot's delete files, not the current
         return self._read_files(
             spark, files,
@@ -1363,8 +1668,10 @@ class IcebergTable(SnapshotTable):
         )
 
     def _affected_files(self, spark, match, candidates=None):
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
+        """Files holding at least one matched row — Iceberg's COW targeting.
+        `candidates` restricts the scan to manifest-pruned files — sound
+        because pruning only drops files whose bounds PROVE no row can
+        match."""
         if candidates is not None and not candidates:
             return []
         files = candidates if candidates is not None else self.current_files()
@@ -1373,16 +1680,127 @@ class IcebergTable(SnapshotTable):
         return sorted({r["f"] for r in rows})
 
     def _tagged_read(self, spark):
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
+        """Current-snapshot read with a `__file` column naming each row's
+        source data file, from the deletes-aware `_metadata` scan
+        (input_file_name() cannot bind once the plan joins a second file
+        source — the positional-delete anti-join)."""
         files = self.current_files()
         if not files:
-            return super()._tagged_read(spark)
+            return self.read(spark).withColumn("__file", F.input_file_name())
         return (
             self._scan_with_pos(spark, files, self.current_delete_files(), self.eq_entries_at())
             .withColumnRenamed("__path", "__file")
             .drop("__pos")
         )
+
+    def changes_between(
+        self,
+        spark: SparkSession,
+        from_snapshot_id: int,
+        to_snapshot_id: int | None = None,
+    ) -> DataFrame:
+        """Row-level change feed between two snapshots — the mechanism under
+        Snowflake STREAM objects: rows visible at `to` but not `from` are
+        INSERTs, the reverse are DELETEs (an UPDATE surfaces as the pair).
+
+        FILE-GRANULAR fast path: immutable files mean rows in files common
+        to both snapshots cancel out of the diff, so only (files_to -
+        files_from) and (files_from - files_to) are read — a 1-row append
+        on a 100 TB table diffs one file, not the table. When row-level
+        tombstones (positional/equality deletes) changed between the
+        snapshots, the changed visibility can touch common files too, so
+        the diff falls back to reading both sides whole (correctness
+        first; tombstone-delta pruning is a future refinement). exceptAll
+        keeps multiplicity, so duplicate rows diff correctly.
+        """
+        snaps = self.snapshots()
+        to_id = to_snapshot_id if to_snapshot_id is not None else snaps[-1]["id"]
+        f_from = self.files_at(from_snapshot_id)
+        f_to = self.files_at(to_id)
+        dels_from = self.deletes_at(from_snapshot_id)
+        dels_to = self.deletes_at(to_id)
+        eq_from = self.eq_entries_at(from_snapshot_id)
+        eq_to = self.eq_entries_at(to_id)
+        tombstones_changed = sorted(dels_from) != sorted(dels_to) or eq_from != eq_to
+        if tombstones_changed:
+            only_to = f_to
+            only_from = f_from
+        else:
+            only_to = [f for f in f_to if f not in set(f_from)]
+            only_from = [f for f in f_from if f not in set(f_to)]
+        rows_to = rows_from = None
+        if only_to:
+            rows_to = self._read_files(spark, only_to, deletes=dels_to, eq_entries=eq_to)
+        if only_from:
+            rows_from = self._read_files(spark, only_from, deletes=dels_from, eq_entries=eq_from)
+        if rows_to is None and rows_from is None:
+            base = self.read(spark).limit(0)
+            rows_to = rows_from = base
+        elif rows_to is None:
+            rows_to = rows_from.limit(0)
+        elif rows_from is None:
+            rows_from = rows_to.limit(0)
+        ins = rows_to.exceptAll(rows_from).withColumn(
+            "METADATA$ACTION", F.lit("INSERT")
+        )
+        dels = rows_from.exceptAll(rows_to).withColumn(
+            "METADATA$ACTION", F.lit("DELETE")
+        )
+        return ins.unionByName(dels).withColumn("METADATA$ISUPDATE", F.lit(False))
+
+    # -- writes ------------------------------------------------------------
+
+    def append(self, df: DataFrame) -> int:
+        new = self._write_files(df)
+        return self._commit_delta("append", added=new, removed=[])
+
+    def replace_contents(self, df: DataFrame) -> int:
+        """Full-refresh commit: the new snapshot is exactly df (history and
+        time travel keep the old contents) — the materialization step of a
+        dynamic table refresh."""
+        new = self._write_files(df)
+        return self._append_snapshot(new, "replace", delete_files=[])
+
+    def truncate(self) -> int:
+        """New empty snapshot; history (and time travel) keeps the data."""
+        return self._append_snapshot([], "truncate", delete_files=[])
+
+    def merge_apply(
+        self,
+        spark: SparkSession,
+        source: DataFrame,
+        cond,
+        t_alias: str,
+        matched_result,
+        inserts: DataFrame | None,
+    ) -> tuple[int, int]:
+        """File-granular MERGE: rewrite only files holding matched target
+        rows (matched_result(sub_df) -> their post-merge rows), append
+        insert files untouched-by-rewrite. -> (n_inserted, n_files_rewritten)
+        """
+        # the file path must bind to a single scan: stamp it on the TARGET
+        # before the join touches any other source
+        tagged = self._tagged_read(spark).alias(t_alias)
+        match_rows = tagged.join(source, cond, "left_semi")
+        affected = sorted(
+            {
+                r["__file"].replace("file://", "").replace("file:", "")
+                for r in match_rows.select("__file").distinct().collect()
+            }
+        )
+        new: list[str] = []
+        if affected:
+            sub = self._read_files(spark, affected).alias(t_alias)
+            untouched = sub.join(source, cond, "left_anti").select(*self.read(spark).columns)
+            rewritten = untouched.unionByName(matched_result(sub))
+            new += self._write_files(rewritten)
+        n_ins = 0
+        if inserts is not None:
+            n_ins = inserts.count()
+            if n_ins:
+                new += self._write_files(inserts)
+        self._commit_delta("merge", added=new, removed=affected)
+        return n_ins, len(affected)
 
     def _write_position_deletes(self, positions) -> list[str]:
         """Write (file_path, pos) rows as spec-conformant position-delete
@@ -1415,10 +1833,18 @@ class IcebergTable(SnapshotTable):
         return sorted(targets)
 
     def delete_where(self, spark, match, cond_str: str | None = None):
+        """-> (rows_deleted, n_files_rewritten). Copy-on-write rewrites the
+        files holding matched rows; merge-on-read commits position deletes."""
         if self._delete_mode() != "merge-on-read":
-            return super().delete_where(spark, match, cond_str=cond_str)
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
+            affected = self._affected_files(spark, match, self._candidate_files(cond_str))
+            if not affected:
+                return 0, 0
+            sub = self._read_files(spark, affected)
+            n_del = sub.filter(match).count()
+            survivors = sub.filter(~match)
+            new = self._write_files(survivors) if survivors.limit(1).count() else []
+            self._commit_delta("delete", added=new, removed=affected)
+            return n_del, len(affected)
         candidates = self._candidate_files(cond_str)
         if candidates is not None and not candidates:
             return 0, 0
@@ -1445,10 +1871,26 @@ class IcebergTable(SnapshotTable):
         return n, 0  # zero data files rewritten — the point of merge-on-read
 
     def update_where(self, spark, match, assign_exprs, cond_str: str | None = None):
+        """-> (rows_updated, n_files_rewritten); simultaneous assignment.
+        Copy-on-write rewrites the files holding matched rows; merge-on-read
+        position-deletes the old rows and appends the new ones."""
         if self._delete_mode() != "merge-on-read":
-            return super().update_where(spark, match, assign_exprs, cond_str=cond_str)
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
+            affected = self._affected_files(spark, match, self._candidate_files(cond_str))
+            if not affected:
+                return 0, 0
+            sub = self._read_files(spark, affected)
+            n_upd = sub.filter(match).count()
+            out = sub.select(
+                *[
+                    F.when(match, F.expr(assign_exprs[c])).otherwise(F.col(c)).alias(c)
+                    if c in assign_exprs
+                    else F.col(c)
+                    for c in sub.columns
+                ]
+            )
+            new = self._write_files(out)
+            self._commit_delta("update", added=new, removed=affected)
+            return n_upd, len(affected)
         candidates = self._candidate_files(cond_str)
         if candidates is not None and not candidates:
             return 0, 0
@@ -1796,6 +2238,18 @@ class IcebergTable(SnapshotTable):
     # -- lifecycle ---------------------------------------------------------
 
     @classmethod
+    def _init(cls, root: str, meta: dict) -> "IcebergTable":
+        """Lay out an empty table at `root` with `meta` as v1 metadata."""
+        os.makedirs(os.path.join(root, "data"))
+        t = cls(root)
+        os.makedirs(t._meta_dir)
+        with open(t._version_path(1), "w") as f:
+            json.dump(meta, f, indent=1)
+        with open(t._hint_path, "w") as f:
+            f.write("1")
+        return t
+
+    @classmethod
     def create(
         cls,
         root: str,
@@ -1818,78 +2272,111 @@ class IcebergTable(SnapshotTable):
             shutil.rmtree(root)
         if cluster_by:
             df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
-        os.makedirs(os.path.join(root, "data"))
-        t = cls(root)
-        os.makedirs(t._meta_dir)
-        next_id = [1]
-        fields = _iceberg_fields(df.schema, next_id)
-        meta = {
-            "format-version": 2,
-            "table-uuid": str(uuid.uuid4()),
-            "location": root,
-            "last-sequence-number": 0,
-            "last-updated-ms": int(time.time() * 1000),
-            "last-column-id": next_id[0] - 1,
-            "schemas": [{"type": "struct", "schema-id": 0, "fields": fields}],
-            "current-schema-id": 0,
-            "partition-specs": [
-                {
-                    "spec-id": 0,
-                    "fields": [
-                        {
-                            # identity keeps the column name; transforms get
-                            # the conventional <col>_<transform> field name
-                            "name": src if tr == "identity" else f"{src}_{tr.split('[')[0]}",
-                            "transform": tr,
-                            "source-id": next(
-                                f["id"] for f in fields if f["name"].lower() == src
-                            ),
-                            "field-id": 1000 + i,
-                        }
-                        for i, (src, tr) in enumerate(
-                            _parse_partition_entry(c) for c in (partition_by or [])
-                        )
-                    ],
-                }
-            ],
-            "default-spec-id": 0,
-            # partition field ids start at 1000
-            "last-partition-id": 999 + len(partition_by or []),
-            "sort-orders": [{"order-id": 0, "fields": []}]
-            if not cluster_by
-            else [
-                {"order-id": 0, "fields": []},
-                {
-                    "order-id": 1,
-                    "fields": [
-                        {
-                            "transform": "identity",
-                            "source-id": next(
-                                f["id"] for f in fields if f["name"].lower() == c.lower()
-                            ),
-                            "direction": "asc",
-                            "null-order": "nulls-first",
-                        }
-                        for c in cluster_by
-                    ],
-                },
-            ],
-            "default-sort-order-id": 0 if not cluster_by else 1,
-            "properties": {"write.format.default": "parquet"},
-            "snapshots": [],
-            "snapshot-log": [],
-            "metadata-log": [],
-        }
-        with open(t._version_path(1), "w") as f:
-            json.dump(meta, f, indent=1)
-        with open(t._hint_path, "w") as f:
-            f.write("1")
+        t = cls._init(root, _new_metadata(root, df.schema, cluster_by, partition_by))
         files = t._write_files(df)
         t._append_snapshot(files, "append")
         return t
 
+    @classmethod
+    def adopt(cls, root: str, files: list[str], schema: T.StructType) -> "IcebergTable":
+        """Adopt a plain table's EXISTING parquet files as snapshot 1 — the
+        upgrade that gives unpartitioned plain tables file-granular DML.
+        Metadata-scale: each file is MOVED (same-filesystem rename, same
+        basename) under `root/data/adopted-v1`, never read or rewritten;
+        manifest bounds come from the parquet footers. The metadata is
+        built before the first rename, so an unmappable column type raises
+        with every source file still in place; a failure after the renames
+        (footer read, manifest write, commit) moves the files back and
+        removes `root` before re-raising."""
+        t = cls._init(root, _new_metadata(root, schema))
+        dest_dir = os.path.join(root, "data", "adopted-v1")
+        os.makedirs(dest_dir)
+        moved: list[tuple[str, str]] = []
+        try:
+            for f in files:
+                dest = os.path.join(dest_dir, os.path.basename(f))
+                os.rename(f, dest)
+                moved.append((f, dest))
+            t._append_snapshot(sorted(d for _f, d in moved), "append")
+        except BaseException:
+            for f, dest in reversed(moved):
+                os.rename(dest, f)
+            shutil.rmtree(root, ignore_errors=True)
+            raise
+        return t
 
-#: SnapshotTable operation names -> Iceberg snapshot summary operations
+
+def _new_metadata(
+    root: str,
+    schema: T.StructType,
+    cluster_by: list[str] | None = None,
+    partition_by: list[str] | None = None,
+) -> dict:
+    """v1 table metadata (no snapshots yet) for a table of `schema`, with
+    an identity/transform partition spec and CLUSTER BY sort order."""
+    next_id = [1]
+    fields = _iceberg_fields(schema, next_id)
+    return {
+        "format-version": 2,
+        "table-uuid": str(uuid.uuid4()),
+        "location": root,
+        "last-sequence-number": 0,
+        "last-updated-ms": int(time.time() * 1000),
+        "last-column-id": next_id[0] - 1,
+        "schemas": [{"type": "struct", "schema-id": 0, "fields": fields}],
+        "current-schema-id": 0,
+        "partition-specs": [
+            {
+                "spec-id": 0,
+                "fields": [
+                    {
+                        # identity keeps the column name; transforms get
+                        # the conventional <col>_<transform> field name
+                        "name": src if tr == "identity" else f"{src}_{tr.split('[')[0]}",
+                        "transform": tr,
+                        "source-id": next(
+                            f["id"] for f in fields if f["name"].lower() == src
+                        ),
+                        "field-id": 1000 + i,
+                    }
+                    for i, (src, tr) in enumerate(
+                        _parse_partition_entry(c) for c in (partition_by or [])
+                    )
+                ],
+            }
+        ],
+        "default-spec-id": 0,
+        # partition field ids start at 1000
+        "last-partition-id": 999 + len(partition_by or []),
+        "sort-orders": [{"order-id": 0, "fields": []}]
+        if not cluster_by
+        else [
+            {"order-id": 0, "fields": []},
+            {
+                "order-id": 1,
+                "fields": [
+                    {
+                        "transform": "identity",
+                        "source-id": next(
+                            f["id"] for f in fields if f["name"].lower() == c.lower()
+                        ),
+                        "direction": "asc",
+                        "null-order": "nulls-first",
+                    }
+                    for c in cluster_by
+                ],
+            },
+        ],
+        "default-sort-order-id": 0 if not cluster_by else 1,
+        "properties": {"write.format.default": "parquet"},
+        "snapshots": [],
+        "snapshot-log": [],
+        "metadata-log": [],
+    }
+
+
+#: logical operation names (the `operation` each write commits through
+#: _append_snapshot/_commit_delta) -> Iceberg snapshot summary operations
 _ICEBERG_OP = {
     "append": "append",
     "merge": "overwrite",
